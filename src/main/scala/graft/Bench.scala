@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query (bench=true) on
@@ -87,7 +89,7 @@ object Bench {
     // warmup 1 — tiny SF: classload + codegen out of the measured numbers
     benched.foreach { d =>
       try exhaust(d, "/root/testdata/sf0.001")
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // warmup 2 — the TARGET SF, untimed: page cache and JIT reach
     // steady state at the measured scale. Without this, pass 1 ran every
@@ -96,7 +98,7 @@ object Bench {
     // (round 3: dd_ngram_jaccard 10.9 s recorded vs 2.5 s steady).
     benched.foreach { d =>
       try exhaust(d, sfDir)
-      catch { case _: Throwable => () }
+      catch { case NonFatal(_) => () }
     }
     // three INTERLEAVED timed passes (all queries ×1, then ×2, ×3): a
     // transient memory-pressure episode now inflates one PASS, not all
@@ -118,13 +120,13 @@ object Bench {
         // chain) so the timed run measures the kernel, not a cached
         // checkpoint read left by the warmups or a prior pass; the
         // reset itself (unpersist bookkeeping) stays outside the timer
-        try d.resetMemo.foreach(_(spark, sfDir)) catch { case _: Throwable => () }
+        try d.resetMemo.foreach(_(spark, sfDir)) catch { case NonFatal(_) => () }
         val t0 = System.nanoTime()
         try {
           exhaust(d, sfDir)
           samples(d.name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(d.name, Nil)
         } catch {
-          case t: Throwable =>
+          case NonFatal(t) =>
             errors(d.name) = s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("").take(120)}"
         }
       }
@@ -144,8 +146,9 @@ object Bench {
     // line stays the contract): the 257-query line is ~8 KB and every
     // 2000-char stdout-tail capture r01–r15 truncated it to
     // unparseable, losing the round-over-round totals. A short
-    // total-only line at the very end of stdout survives any tail.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","n":${results.size},"n_errors":${errors.size},"sf":"$sfDir"}""")
+    // total-only line at the very end of stdout survives any tail. Its
+    // own metric name keeps consumers matching "total" to one record.
+    println(s"""{"metric":"total_compact","value":$total,"unit":"sec","n":${results.size},"n_errors":${errors.size},"sf":"$sfDir"}""")
     // Persist the complete line as a repo artifact: the round log keeps
     // only a truncated tail of stdout, which loses the total and early
     // per-query figures. The committed artifact is what
@@ -165,7 +168,7 @@ object Bench {
           else s"bench/last_$sfName.json"))
       Option(out.getParent).foreach(java.nio.file.Files.createDirectories(_))
       java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () } // the stdout line is the contract; the artifact is best-effort
+    } catch { case NonFatal(_) => () } // the stdout line is the contract; the artifact is best-effort
     spark.stop()
   }
 
@@ -221,8 +224,8 @@ object Bench {
     val defs = Registry.all.filter(_.streamBench)
     def exhaust(d: QueryDef, dir: String): Unit =
       d.run(spark, dir).write.mode("overwrite").format("noop").save()
-    defs.foreach(d => try exhaust(d, "/root/testdata/sf0.001") catch { case _: Throwable => () })
-    defs.foreach(d => try exhaust(d, sfDir) catch { case _: Throwable => () })
+    defs.foreach(d => try exhaust(d, "/root/testdata/sf0.001") catch { case NonFatal(_) => () })
+    defs.foreach(d => try exhaust(d, sfDir) catch { case NonFatal(_) => () })
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     for (_ <- 1 to 3) {
       System.gc()
@@ -231,7 +234,7 @@ object Bench {
         try {
           exhaust(d, sfDir)
           samples(d.name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(d.name, Nil)
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
       }
     }
     val results = defs.map(d =>
@@ -266,9 +269,9 @@ object Bench {
     def exhaust(d: QueryDef, dir: String): Unit =
       d.run(spark, dir).write.mode("overwrite").format("noop").save()
     def sweepTmp(): Unit = TmpDirs.sweepCreated()
-    defs.foreach(d => try exhaust(d, "/root/testdata/sf0.001") catch { case _: Throwable => () })
+    defs.foreach(d => try exhaust(d, "/root/testdata/sf0.001") catch { case NonFatal(_) => () })
     sweepTmp()
-    defs.foreach(d => try exhaust(d, sfDir) catch { case _: Throwable => () })
+    defs.foreach(d => try exhaust(d, sfDir) catch { case NonFatal(_) => () })
     val samples = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
     for (_ <- 1 to 3) {
       sweepTmp()
@@ -278,7 +281,7 @@ object Bench {
         try {
           exhaust(d, sfDir)
           samples(d.name) = ((System.nanoTime() - t0) / 1e9) :: samples.getOrElse(d.name, Nil)
-        } catch { case _: Throwable => () }
+        } catch { case NonFatal(_) => () }
       }
     }
     sweepTmp()
@@ -339,17 +342,17 @@ object Bench {
     val defs = Registry.all.filter(d => names.contains(d.name))
     def exhaust(d: QueryDef): Unit =
       d.run(spark, sfDir).write.mode("overwrite").format("noop").save()
-    defs.foreach(d => try exhaust(d) catch { case _: Throwable => () }) // warmup
+    defs.foreach(d => try exhaust(d) catch { case NonFatal(_) => () }) // warmup
     val out = new StringBuilder("{")
     defs.zipWithIndex.foreach { case (d, di) =>
       // the timed lane's memo discipline applies here too: without the
       // reset a memoized query profiles as a checkpoint READ (17 tiny
       // stages, ~1 s) instead of its kernel
-      try d.resetMemo.foreach(_(spark, sfDir)) catch { case _: Throwable => () }
+      try d.resetMemo.foreach(_(spark, sfDir)) catch { case NonFatal(_) => () }
       val l = new ProfileListener
       spark.sparkContext.addSparkListener(l)
       val t0 = System.nanoTime()
-      val err = try { exhaust(d); None } catch { case t: Throwable => Some(t.toString.take(200)) }
+      val err = try { exhaust(d); None } catch { case NonFatal(t) => Some(t.toString.take(200)) }
       val sec = (System.nanoTime() - t0) / 1e9
       // the listener bus is async with no public flush; poll until the
       // task-end aggregates are stable across two consecutive snapshots

@@ -47,25 +47,14 @@ object Pipeline {
     } catch { case _: Exception => false }
 
     val extractedNow = if (!alreadyExtracted) {
-      val chunks = documents
-        .selectExpr("doc_id", "source",
-          "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-        .where(s"length(tc) >= ${operators.Chunker.MinParagraph}")
-        .selectExpr("doc_id", "source",
-          s"""explode(CASE WHEN length(tc) <= ${operators.Chunker.ChunkSize}
-                           THEN array(named_struct('chunk_number', cast(null AS int), 'chunk_text', tc))
-                           ELSE filter(transform(sequence(0, length(tc) - 1, ${operators.Chunker.Stride}),
-                                       i -> named_struct('chunk_number', cast(i div ${operators.Chunker.Stride} + 1 AS int),
-                                                         'chunk_text', substring(tc, i + 1, ${operators.Chunker.ChunkSize}))),
-                                       s -> length(s.chunk_text) >= ${operators.Chunker.MinChunk})
-                      END) AS c""")
+      val chunks = operators.Chunker.chunked(documents, "doc_id", "source")
         .select(
-          col("c.chunk_text").as("text"),
+          col("chunk_text").as("text"),
           col("source"),
           col("doc_id").cast("int").as("page_number"), // doc stands in for page
           lit(1).as("paragraph_number"),
           lit(1).as("total_pages"),
-          col("c.chunk_number").as("chunk_number"))
+          col("chunk_number"))
       ChunkStore.writeCsv(chunks, extractedDir)
       true
     } else false

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{QueryDef, Tables}
+import org.apache.spark.sql.DataFrame
 
 /** C1/C2 — the reference's core reshaping operator: fixed-size
   * overlapping chunking with metadata enrichment.
@@ -36,19 +37,30 @@ object Chunker {
        |                      i -> named_struct('chunk_number', cast(i div $Stride + 1 AS int),
        |                                        'chunk_text', substring(tc, i + 1, $ChunkSize))),
        |            s -> length(s.chunk_text) >= $MinChunk)
-       |END AS chunks""".stripMargin
+       |END""".stripMargin
+
+  /** E4 clean + E5 min-length filter + C1 chunking of a frame with a
+    * `text` column: one row per chunk carrying the `carry` columns, the
+    * cleaned text `tc`, `chunk_number` and `chunk_text`. Callers select
+    * what they need; column pruning drops the rest, so the plan stays a
+    * single narrow map over the scan. Shared by c1/c2 and the
+    * knowledge-base build ([[graft.Pipeline.setupKnowledgeBase]]).
+    */
+  def chunked(docs: DataFrame, carry: String*): DataFrame =
+    docs
+      .selectExpr(carry :+
+        "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc": _*)
+      .where(s"length(tc) >= $MinParagraph")
+      .selectExpr(carry ++ Seq("tc", s"explode($chunksExpr) AS c"): _*)
+      .selectExpr(carry ++ Seq("tc", "c.chunk_number AS chunk_number", "c.chunk_text AS chunk_text"): _*)
 
   def queries: Seq[QueryDef] = Seq(
     // ---------------------------------------------------------------- C1
     QueryDef(
       "c1_chunk",
       (spark, dir) =>
-        Tables.documents(spark, dir)
-          .selectExpr("doc_id", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-          .where(s"length(tc) >= $MinParagraph")
-          .selectExpr("doc_id", chunksExpr)
-          .selectExpr("doc_id", "explode(chunks) AS c")
-          .selectExpr("doc_id", "c.chunk_number AS chunk_number", "c.chunk_text AS chunk_text"),
+        chunked(Tables.documents(spark, dir), "doc_id")
+          .select("doc_id", "chunk_number", "chunk_text"),
       Some(s"""
         WITH ok AS (
           SELECT doc_id, regexp_replace(regexp_replace(text, '\\s{2,}', ' ', 'g'), '^\\s+|\\s+$$', '', 'g') AS tc
@@ -74,15 +86,10 @@ object Chunker {
     QueryDef(
       "c2_chunk_meta",
       (spark, dir) =>
-        Tables.documents(spark, dir)
-          .selectExpr("doc_id", "source", "regexp_replace(regexp_replace(text, '\\\\s{2,}', ' '), '^\\\\s+|\\\\s+$', '') AS tc")
-          .where(s"length(tc) >= $MinParagraph")
-          .selectExpr("doc_id", "source", "cast(length(tc) AS bigint) AS char_len", chunksExpr)
-          .selectExpr("doc_id", "source", "char_len", "explode(chunks) AS c")
+        chunked(Tables.documents(spark, dir), "doc_id", "source")
           .selectExpr(
-            "doc_id", "source", "char_len",
-            "c.chunk_number AS chunk_number",
-            "cast(length(c.chunk_text) AS bigint) AS chunk_len")
+            "doc_id", "source", "cast(length(tc) AS bigint) AS char_len",
+            "chunk_number", "cast(length(chunk_text) AS bigint) AS chunk_len")
           .withColumn(
             "total_chunks",
             org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1))

@@ -163,14 +163,20 @@ object Qa {
       .getOrElse("抱歉，没有检索到相关资料。")
 
   /** Q4 — the reference's whole query lifecycle over a graft vector
-    * store: kNN retrieval (broadcast query vector + TakeOrdered), Q1
-    * context, Q2 prompt, Q3 answer (stub by default, any generator
-    * pluggable), assembled response.
+    * store: exact kNN retrieval, Q1 context, Q2 prompt, Q3 answer (stub
+    * by default, any generator pluggable), assembled response.
+    *
+    * Retrieval is [[graft.sources.ChunkStore.similaritySearch]]'s, with
+    * its rows used directly: the first question on a store loads it
+    * into a session-resident index that later questions reuse (one
+    * small Spark job each) until the context stops or the store's files
+    * change; the index costs about the store's decoded size in memory.
     */
   def answerWithSources(spark: org.apache.spark.sql.SparkSession, storePath: String,
                         query: String, topK: Int = 5,
                         generate: Option[String => String] = None): Response = {
-    val rows = graft.sources.ChunkStore.similaritySearch(spark, storePath, query, topK).collect()
+    val rows = graft.sources.VectorIndex.search(spark, storePath, query, topK,
+      graft.HashedTokenEmbedder).rows
     val sources = rows.map { r =>
       Source(r.getAs[String]("text"), r.getAs[Map[String, String]]("metadata"),
         r.getAs[Double]("similarity"))

@@ -136,6 +136,25 @@ case class CosineSim(left: Expression, right: Expression) extends VectorFoldExpr
     copy(left = newLeft, right = newRight)
 }
 
+object CosineSim {
+  /** The same fused loop over plain arrays (float elements widened to
+    * double first, as the expression reads them): a score computed
+    * outside a plan is bit-identical to `cosine_f` over the same rows.
+    */
+  def fold(x: Array[Double], y: Array[Double]): Double = {
+    val n = math.min(x.length, y.length)
+    var xy = 0.0; var xx = 0.0; var yy = 0.0
+    var i = 0
+    while (i < n) {
+      val xv = x(i)
+      val yv = y(i)
+      xy += xv * yv; xx += xv * xv; yy += yv * yv
+      i += 1
+    }
+    xy / (math.sqrt(xx) * math.sqrt(yy))
+  }
+}
+
 /** argmax_cos(q, cands) — 0-based index of the candidate vector (in an
   * array-of-arrays) with the highest cosine similarity to `q`; ties go
   * to the LOWEST index, and NaN compares greatest

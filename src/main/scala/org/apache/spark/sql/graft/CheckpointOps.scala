@@ -127,14 +127,10 @@ object CheckpointOps {
     */
   def fence[T](ds: org.apache.spark.sql.Dataset[T]): org.apache.spark.sql.Dataset[T] =
     if (reliableMode(ds.sparkSession)) {
-      ensureCheckpointDir(ds.sparkSession)
       val cds = ds.asInstanceOf[Dataset[T]]
       val spark = cds.sparkSession
       val qe = cds.queryExecution
-      val rdd: RDD[InternalRow] = qe.toRdd.map(_.copy())
-      rdd.persist(fenceLevelOverride(spark)
-        .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      rdd.checkpoint()
+      val rdd = fence(spark, qe.toRdd.map(_.copy()))
       materializeAsAction(qe, "fence", rdd)
       Dataset.ofRows(spark, LogicalRDD(qe.analyzed.output, rdd)(spark))
         .as[T](cds.encoder)
@@ -151,6 +147,33 @@ object CheckpointOps {
     def fenced: org.apache.spark.sql.Dataset[T] = fence(ds)
   }
 
+  /** [[fence]] for a plain RDD, under the same confs: marks `rdd` for
+    * a local checkpoint (reliable files under
+    * `spark.graft.checkpoint.reliable=true`) and returns it. Lazy, like
+    * `RDD.localCheckpoint`: the first job over `rdd`, or over an RDD
+    * derived from it, stores the blocks and cuts the lineage, so a
+    * fence read by one job per use costs no job of its own.
+    * Releasable via [[release]].
+    */
+  def fence[T](spark: org.apache.spark.sql.SparkSession, rdd: RDD[T]): RDD[T] = {
+    if (reliableMode(spark)) {
+      ensureCheckpointDir(spark)
+      // persist BEFORE checkpointing: the post-job checkpoint write
+      // then reads the cached blocks instead of recomputing the
+      // lineage, and healthy-path consumers keep block-speed reads
+      rdd.persist(fenceLevelOverride(spark)
+        .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      rdd.checkpoint()
+    } else {
+      // persist-before-mark: localCheckpoint() keeps a pre-set level
+      // (adding the disk flag it requires), so the override flows
+      // through; unset, localCheckpoint applies its own default
+      fenceLevelOverride(spark).foreach(rdd.persist(_))
+      rdd.localCheckpoint()
+    }
+    rdd
+  }
+
   /** Hash-partition `df` by `keys` into `numParts` partitions,
     * eagerly checkpoint the result (local blocks, or reliable files
     * under `spark.graft.checkpoint.reliable=true`), and return a
@@ -165,22 +188,7 @@ object CheckpointOps {
     val parted = df.repartition(numParts, keys.map(df.col): _*)
     val spark = parted.sparkSession.asInstanceOf[SparkSession]
     val qe = parted.queryExecution
-    val rdd: RDD[InternalRow] = qe.toRdd.map(_.copy())
-    if (reliableMode(spark)) {
-      ensureCheckpointDir(spark)
-      // persist BEFORE checkpointing: the post-job checkpoint write
-      // then reads the cached blocks instead of recomputing the
-      // repartition, and healthy-path consumers keep block-speed reads
-      rdd.persist(fenceLevelOverride(spark)
-        .getOrElse(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      rdd.checkpoint()
-    } else {
-      // persist-before-mark: localCheckpoint() keeps a pre-set level
-      // (adding the disk flag it requires), so the override flows
-      // through; unset, localCheckpoint applies its own default
-      fenceLevelOverride(spark).foreach(rdd.persist(_))
-      rdd.localCheckpoint()
-    }
+    val rdd = fence(spark, qe.toRdd.map(_.copy()))
     // materialize NOW so every consumer reuses the blocks — as a named
     // SQL execution so observations on `df` complete (see
     // materializeAsAction)
@@ -207,15 +215,18 @@ object CheckpointOps {
     */
   def release(df: DataFrame): Unit =
     df.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-        // reliable fences also leave checkpoint FILES; a superseded
-        // iteration fence must delete them or a 100-round loop leaves
-        // 100 corpus-sized file sets under the checkpoint dir
-        if (l.rdd.getCheckpointFile.isDefined) {
-          org.apache.spark.rdd.ReliableRDDCheckpointData
-            .cleanCheckpoint(l.rdd.context, l.rdd.id)
-        }
+      case l: LogicalRDD => release(l.rdd)
       case _ => ()
     }
+
+  /** [[release]] for an RDD fenced by the RDD overload of [[fence]]. */
+  def release(rdd: RDD[_]): Unit = {
+    rdd.unpersist(blocking = false)
+    // reliable fences also leave checkpoint FILES; a superseded
+    // iteration fence must delete them or a 100-round loop leaves
+    // 100 corpus-sized file sets under the checkpoint dir
+    if (rdd.getCheckpointFile.isDefined) {
+      org.apache.spark.rdd.ReliableRDDCheckpointData.cleanCheckpoint(rdd.context, rdd.id)
+    }
+  }
 }

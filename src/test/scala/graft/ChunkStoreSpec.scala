@@ -1,7 +1,8 @@
 package graft
 
 import graft.sources.ChunkStore
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.Files
 
@@ -9,6 +10,47 @@ import java.nio.file.Files
   * chunk_number, add is idempotent, positional ids are deterministic.
   */
 class ChunkStoreSpec extends SparkSpec {
+
+  // toy embedding space: ASCII codes of the first 4 characters,
+  // L2-normalized — nothing like the default hashed tokens (and a
+  // space where the sample texts are pairwise distinct), so a pass
+  // proves the seam carries the custom space end to end. An empty
+  // text embeds to the zero vector, whose cosine is NaN.
+  private object PrefixCodeEmbedder extends Embedder {
+    override val dim: Int = 4
+    override def embed(text: Column): Column = {
+      val counts = array((1 to dim).map(i => ascii(substring(text, i, 1))): _*)
+        .cast("array<double>")
+      val nrm = sqrt(aggregate(transform(counts, x => x * x), lit(0.0), (acc, v) => acc + v))
+      when(nrm === 0.0, counts).otherwise(transform(counts, x => x / nrm))
+    }
+  }
+
+  /** The Catalyst formulation similaritySearch used before its
+    * session-resident index, kept as the oracle the index must match.
+    */
+  private def catalystTopK(store: String, query: String, k: Int, embedder: Embedder): DataFrame = {
+    graft.plans.VectorExprs.register(spark)
+    val q = spark.range(1).select(embedder.embed(lit(query)).as("q_emb"))
+    spark.read.parquet(store).crossJoin(broadcast(q))
+      .selectExpr("id", "text", "metadata", "cosine_f(embedding, q_emb) AS similarity")
+      .orderBy(desc("similarity"), col("id"))
+      .limit(k)
+  }
+
+  /** Same rows in the same order: id, text, metadata and the exact
+    * similarity bits (NaN and null included), and the same schema.
+    */
+  private def assertSameAsCatalyst(store: String, query: String, k: Int,
+                                   embedder: Embedder = HashedTokenEmbedder): Unit = {
+    val got = ChunkStore.similaritySearch(spark, store, query, k, embedder)
+    val want = catalystTopK(store, query, k, embedder)
+    assert(got.schema == want.schema)
+    def bits(r: Row) = (r.getString(0), r.getString(1), r.getMap[String, String](2),
+      Option(r.get(3)).map(s => java.lang.Double.doubleToRawLongBits(s.asInstanceOf[Double])))
+    assert(got.collect().map(bits).toSeq == want.collect().map(bits).toSeq,
+      s"query '$query', topK $k")
+  }
 
   private def tmp(): String =
     Files.createTempDirectory("graft_store").toString
@@ -142,21 +184,6 @@ class ChunkStoreSpec extends SparkSpec {
   }
 
   test("V1 seam: a custom Embedder round-trips ingest → search") {
-    import org.apache.spark.sql.Column
-    import org.apache.spark.sql.functions._
-    // toy embedding space: ASCII codes of the first 4 characters,
-    // L2-normalized — nothing like the default hashed tokens (and a
-    // space where the sample texts are pairwise distinct), so a pass
-    // proves the seam carries the custom space end to end
-    object PrefixCodeEmbedder extends Embedder {
-      override val dim: Int = 4
-      override def embed(text: Column): Column = {
-        val counts = array((1 to dim).map(i => ascii(substring(text, i, 1))): _*)
-          .cast("array<double>")
-        val nrm = sqrt(aggregate(transform(counts, x => x * x), lit(0.0), (acc, v) => acc + v))
-        when(nrm === 0.0, counts).otherwise(transform(counts, x => x / nrm))
-      }
-    }
     val store = tmp() + "/store"
     ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"),
       embedder = PrefixCodeEmbedder)
@@ -186,6 +213,50 @@ class ChunkStoreSpec extends SparkSpec {
     assert(resp.answer.startsWith("根据资料, delta chunk text"))
     val ctx = graft.operators.Qa.formatContext(resp.sources)
     assert(ctx.contains("[来源1: 文档《b.pdf》第1页第1段]")) // delta is b.pdf page 1
+  }
+
+  test("resident index = Catalyst top-k: default embedder, incl. the alpha/gamma tie") {
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "page_number", "text"))
+    for (q <- Seq("alpha chunk text", "gamma", "delta chunk text", "beta beta", "no such words", "");
+         k <- 1 to 4)
+      assertSameAsCatalyst(store, q, k)
+    // alpha and gamma hash to identical vectors: equal scores, id order
+    val tie = ChunkStore.similaritySearch(spark, store, "alpha chunk text", 2).collect()
+    assert(tie.map(_.getAs[String]("text")).toSet == Set("alpha chunk text", "gamma chunk text"))
+    assert(tie(0).getAs[Double]("similarity") == tie(1).getAs[Double]("similarity"))
+    assert(tie(0).getAs[String]("id") < tie(1).getAs[String]("id"))
+  }
+
+  test("resident index = Catalyst top-k: 4-dim custom embedder with a NaN row") {
+    import spark.implicits._
+    val blank = Seq(("", "c.pdf", 1, 1, 1, None: Option[Int]))
+      .toDF("text", "source", "page_number", "paragraph_number", "total_pages", "chunk_number")
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks().union(blank), store, Seq("source", "text"),
+      embedder = PrefixCodeEmbedder)
+    for (q <- Seq("delta chunk text", "alpha", "zzzz", ""); k <- Seq(1, 3, 5))
+      assertSameAsCatalyst(store, q, k, PrefixCodeEmbedder)
+  }
+
+  test("resident index = Catalyst top-k: topK beyond the store, and a reset store") {
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, sampleChunks(), store, Seq("source", "text"))
+    assertSameAsCatalyst(store, "alpha chunk text", 10)
+    ChunkStore.reset(spark, store, spark.read.parquet(store).schema)
+    assertSameAsCatalyst(store, "alpha chunk text", 5)
+    assert(ChunkStore.similaritySearch(spark, store, "alpha chunk text").collect().isEmpty)
+  }
+
+  test("resident index = Catalyst top-k over a multi-partition chunk store") {
+    val chunks = graft.operators.Chunker.queries.head.run(spark, "/root/testdata/sf0.001")
+      .selectExpr("chunk_text AS text", "cast(doc_id AS string) AS source")
+    val store = tmp() + "/store"
+    ChunkStore.addDocuments(spark, chunks, store, Seq("source", "text"))
+    assert(spark.read.parquet(store).rdd.getNumPartitions > 1)
+    val questions = spark.read.parquet(store).select("text").orderBy("id").limit(8).collect()
+      .map(_.getString(0).split(" ").slice(2, 5).mkString(" "))
+    (questions :+ "spark hash join merge sort").foreach(q => assertSameAsCatalyst(store, q, 5))
   }
 
   test("S7/S8: JSON dump writes id/text rows; stats counts them") {

@@ -12,7 +12,17 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
+  private var current: SparkSession = _
+
+  /** The shared session, rebuilt with the same config if a spec stopped
+    * it (the index-lifetime spec stops its context on purpose).
+    */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = build()
+    current
+  }
+
+  private def build(): SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
